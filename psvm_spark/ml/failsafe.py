@@ -2,14 +2,18 @@
 (SURVEY.md A18 — psvm's ``-failsafe`` flag periodically persists IPM
 state so training resumes after a machine failure).
 
-Spark already gives task/stage-level recovery through lineage; what it
-does NOT give is recovery of the *driver-side* iterate of an iterative
-algorithm (psvm's alpha/lambda/xi; here the eigenvector estimate).
-``FailsafeState`` persists that iterate atomically every k iterations;
-``power_iteration`` is the demonstrator — a genuinely distributed
-iterative algorithm (each step is one scan + per-dimension aggregation,
-the same shape as an IPM/OWLQN step) that resumes mid-run and produces
-the identical result (tests/test_ml.py).
+Spark already gives task/stage-level recovery through lineage, and the
+resident-shard AllReduce (``psvm_spark.ml.allreduce``) survives a rank
+failure by relaunching its barrier stage and resending the iterate;
+what neither gives is recovery of the *driver-side* iterate when the
+driver itself dies (psvm's alpha/lambda/xi; here the eigenvector
+estimate).  ``FailsafeState`` persists that iterate atomically every k
+iterations; ``power_iteration`` is the demonstrator — a genuinely
+distributed iterative algorithm (each step is one pass over the
+resident shards + a per-dimension AllReduce, the same shape as an
+IPM/OWLQN step), run as one Spark job per solve, that resumes mid-run
+and produces the identical result (tests/test_ml.py).  The driver saves
+the checkpoint from the hub loop, inside that one job.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ import tempfile
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from psvm_spark.ml import allreduce
 
 
 class FailsafeState:
@@ -49,40 +55,6 @@ class FailsafeState:
             return step, {k: z[k] for k in z.files}
 
 
-def _matvec(df: DataFrame, vec_col: str, v: np.ndarray) -> np.ndarray:
-    """One distributed step: w = X^T (X v), no driver-side row loop.
-
-    Each partition computes its partial X_p^T (X_p v) with one NumPy
-    GEMM against the broadcast iterate (Arrow-batched mapInPandas); the
-    driver sums the per-partition partials — literally psvm's
-    per-rank-partial + AllReduce.  The plan is tiny and constant-shape,
-    so per-iteration cost is the data pass, not Catalyst re-analysis of
-    a dim-wide expression (which dominated an expression-based matvec).
-    """
-    import pandas as pd
-
-    spark = df.sparkSession
-    bv = spark.sparkContext.broadcast(np.asarray(v, dtype=np.float64))
-
-    def part(batches):
-        import numpy as _np
-
-        acc = _np.zeros(len(bv.value))
-        for pdf in batches:
-            if len(pdf):
-                X = _np.stack(pdf["x"].to_numpy()).astype(_np.float64)
-                acc += X.T @ (X @ bv.value)
-        yield pd.DataFrame({"partial": [list(acc)]})
-
-    parts = (
-        df.select(F.col(vec_col).alias("x")).mapInPandas(part, "partial array<double>").collect()
-    )
-    w = np.zeros(len(v))
-    for r in parts:
-        w += np.array(r.partial)
-    return w
-
-
 def power_iteration(
     df: DataFrame,
     vec_col: str,
@@ -96,7 +68,8 @@ def power_iteration(
     Returns (unit eigenvector, Rayleigh quotient).  With ``state`` set,
     restarting after any crash re-enters at the last checkpointed
     iteration and yields the identical result (deterministic start, no
-    RNG).
+    RNG).  All iterations run in one Spark job; a run that has nothing
+    left to do starts none and returns (v, 0.0).
     """
     start = 0
     v = np.ones(dim) / np.sqrt(dim)
@@ -105,14 +78,31 @@ def power_iteration(
         if restored is not None:
             start, arrays = restored
             v = arrays["v"]
-    lam = 0.0
-    for it in range(start, n_iter):
-        w = _matvec(df, vec_col, v)
-        lam = float(v @ w)
-        nrm = float(np.linalg.norm(w))
-        if nrm == 0.0:
-            break
-        v = w / nrm
-        if state is not None and (it + 1) % checkpoint_every == 0:
-            state.save(it + 1, {"v": v})
-    return v, lam
+    if start >= n_iter:
+        return v, 0.0
+
+    # Self-contained closure: executors can't import psvm_spark.
+    def partial(blocks, x):
+        import numpy as _np
+
+        acc = _np.zeros(len(x))
+        for X in blocks:
+            acc += X.T @ (X @ x)
+        return acc
+
+    def solve(hub):
+        v_it, lam = v, 0.0
+        for it in range(start, n_iter):
+            w = hub(v_it)  # X^T (X v): per-rank partials, AllReduced
+            lam = float(v_it @ w)
+            nrm = float(np.linalg.norm(w))
+            if nrm == 0.0:
+                break
+            v_it = w / nrm
+            if state is not None and (it + 1) % checkpoint_every == 0:
+                state.save(it + 1, {"v": v_it})
+        return v_it, lam
+
+    return allreduce.run(
+        df.select(F.col(vec_col).alias("x")), allreduce.vector_loader(), partial, dim, solve
+    )

@@ -14,13 +14,15 @@ approach, we do NOT port that solver: the equivalent capability is
 
 Driver-side p x p eigen-solves mirror psvm's rank-0 serial Cholesky.
 Scale: landmarks/W are broadcast (p ~ sqrt(n) stays small by design);
-the feature map is one Arrow-batched pandas_udf pass, no shuffle.
+the feature map is one Arrow UDF pass over flat buffers, no shuffle,
+and a fit maps its training rows once (``fit_eval_linear_svc`` caches
+the mapped frame for LinearSVC's passes).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
@@ -51,7 +53,8 @@ def nystrom_map(
 
     E[phi(x)^T phi(y)] approximates K(x,y) (Williams & Seeger 2001).
     K_mm^{-1/2} is a p x p driver-side eigensolve (p = #landmarks),
-    broadcast into an Arrow-batched pandas UDF — one narrow pass.
+    broadcast into an Arrow UDF — one narrow pass that reads the input
+    vectors and writes the features as flat Arrow buffers.
     """
     L = np.asarray(landmarks, dtype=np.float64)
     K_mm = _rbf_cross(L, L, gamma)
@@ -63,14 +66,15 @@ def nystrom_map(
     bL = spark.sparkContext.broadcast(L)
     bW = spark.sparkContext.broadcast(W)
     g = float(gamma)
+    d = L.shape[1]
 
     # NOTE: the closure must be self-contained (no psvm_spark imports) —
     # executor Python workers don't have this repo on their sys.path.
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def phi(col: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def phi(col: pa.Array) -> pa.Array:
         import numpy as _np
 
-        X = _np.stack(col.to_numpy()).astype(_np.float64)
+        X = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), d).astype(_np.float64)
         Lv, Wv = bL.value, bW.value
         sq = (
             _np.sum(X * X, axis=1, keepdims=True)
@@ -79,7 +83,9 @@ def nystrom_map(
         )
         _np.maximum(sq, 0.0, out=sq)
         feats = _np.exp(-g * sq) @ Wv.T
-        return pd.Series(list(feats))
+        # n x p rows as list<double> over the same buffer: no per-row objects
+        offsets = _np.arange(0, feats.size + 1, feats.shape[1], dtype=_np.int32)
+        return pa.ListArray.from_arrays(offsets, feats.ravel())
 
     return df.withColumn(out_col, phi(F.col(vec_col)))
 
@@ -148,7 +154,14 @@ def fit_eval_linear_svc(
             ),
         )
         svc = svc.setWeightCol("w")
-    model = svc.fit(tr)
+    # LinearSVC makes two passes over its input (summary, then blocks):
+    # cache just the columns it reads so a feature map runs once per fit
+    cols = [label_col, "features"] + (["w"] if class_weights is not None else [])
+    tr = tr.select(*cols).persist()
+    try:
+        model = svc.fit(tr)
+    finally:
+        tr.unpersist()
     # Drop the training summary before transform: the summary pins the
     # SparkSession, and model.transform's prediction lambda captures the
     # whole model — if ANY df.observe ran earlier in the session, the
@@ -220,8 +233,8 @@ def rff_map(
 
     The alternative low-rank path to Nystrom for SURVEY.md A7: data
     independent (no landmark pass), Omega/b are a fixed-seed draw
-    broadcast once; the map itself is one Arrow-batched pandas UDF
-    pass, no shuffle, memory O(batch x D) per executor.
+    broadcast once; the map itself is one Arrow UDF pass over flat
+    buffers, no shuffle, memory O(batch x D) per executor.
     """
     rng = np.random.default_rng(seed)
     Omega = rng.normal(0.0, np.sqrt(2.0 * gamma), size=(dim_in, n_features))
@@ -232,12 +245,13 @@ def rff_map(
     bO = spark.sparkContext.broadcast(Omega)
     bb = spark.sparkContext.broadcast(b)
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def phi(col: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def phi(col: pa.Array) -> pa.Array:
         import numpy as _np
 
-        X = _np.stack(col.to_numpy()).astype(_np.float64)
-        feats = scale * _np.cos(X @ bO.value + bb.value)
-        return pd.Series(list(feats))
+        X = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), dim_in)
+        feats = scale * _np.cos(X.astype(_np.float64) @ bO.value + bb.value)
+        offsets = _np.arange(0, feats.size + 1, n_features, dtype=_np.int32)
+        return pa.ListArray.from_arrays(offsets, feats.ravel())
 
     return df.withColumn(out_col, phi(F.col(vec_col)))

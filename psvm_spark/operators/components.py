@@ -15,7 +15,7 @@ Scale (100 TB):
 - Each iteration is one shuffle (join on dst) + one map-side-combined
   min-aggregation; `localCheckpoint` truncates lineage so plan size and
   scheduler cost stay O(1) per iteration instead of growing with the
-  loop (same pattern as ml/failsafe.py driver-iterate training).
+  loop.
 - Iterations = graph diameter.  Dup clusters are shallow (stars/cliques
   around a template), so propagation converges in a handful of rounds.
   For adversarially long chains a diameter guard switches to

@@ -125,6 +125,7 @@ def local_df(spark, rows, schema: str):
     rows containing NaN take the plain list path, which preserves it.
     Falls back to the plain list path on any conversion error
     (correctness first; the fast path is an optimization)."""
+    rows = list(rows)  # the NaN scan below must not consume an iterator
     try:
         import pandas as pd
         from pyspark.sql.types import StructType

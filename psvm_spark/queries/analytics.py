@@ -2578,7 +2578,7 @@ def agg_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t, round(pi[idx[t]], 9), obs.get(t, 0), obs.get(t, 0) / total)
         for t in types
     ]
-    return local_df(spark, 
+    return local_df(spark,
         rows, "event_type string, stationary_prob double, n_observed long, observed_freq double"
     )
 
@@ -3493,7 +3493,7 @@ def join_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("py").cast("double") / _PIP_CELL).cast("bigint").alias("cy"),
     )
     cells = local_df(spark, _pip_cells(), "poly_id int, cx bigint, cy bigint")
-    edges = local_df(spark, 
+    edges = local_df(spark,
         _pip_edges(), "poly_id int, x1 long, y1 long, x2 long, y2 long"
     )
     cand = (
@@ -4241,7 +4241,7 @@ def ts_haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
             (level, len(s), sum(v * v for v in d), max(abs(v) for v in d), s[0])
         )
         a = s
-    return local_df(spark, 
+    return local_df(spark,
         out,
         "level int, n_coeffs int, energy bigint, max_abs_d bigint,"
         " first_approx bigint",
@@ -6890,7 +6890,7 @@ def ml_quantile_pinball(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).over(Window.partitionBy("wd")).alias("n"),
         )
     )
-    qs = local_df(spark, 
+    qs = local_df(spark,
         [("0.25",), ("0.50",), ("0.75",)], "qs string"
     ).select(F.col("qs").cast("decimal(3,2)").alias("q"))
     fc = train.join(

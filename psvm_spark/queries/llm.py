@@ -5064,7 +5064,7 @@ def ml_ridge_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scalars inlined per row rather than crossJoin'd: a cross join of two
     # 32-slice local frames is a 1024-task CartesianProduct stage (32x32),
     # ~10 s of pure scheduling for 65 output rows.
-    return local_df(spark, 
+    return local_df(spark,
         out, "coef_idx int, coef double, train_r2 double, n_rows long"
     )
 
@@ -5912,7 +5912,7 @@ def _bpe_learn(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, in
 
 @query("vocab_bpe_merges", oracle=_bpe_oracle())
 def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return local_df(spark, 
+    return local_df(spark,
         _bpe_learn(spark, sf_dir),
         "step int, merge_left string, merge_right string, pair_count long",
     )
@@ -7739,7 +7739,7 @@ def select_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         centers.append([int(v) for v in r.q])
         picked.append(int(r.vec_id))
         out.append((step, int(r.vec_id), int(r.mind)))
-    return local_df(spark, 
+    return local_df(spark,
         out, "step int, center_vec_id bigint, radius_q bigint"
     )
 
@@ -8358,7 +8358,7 @@ def select_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         selected.append(int(best.sid))
         out.append((step, int(best.sid), int(best.gain)))
-    return local_df(spark, 
+    return local_df(spark,
         out, "step int, center_vec_id bigint, marginal_gain bigint"
     )
 
@@ -9505,7 +9505,7 @@ def select_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _, _, _, w_raw in rows:  # lang-sorted fold, mirrored in the oracle
         tot += w_raw
     out = [(l, n, e, round(w / tot, 9)) for l, n, e, w in rows]
-    return local_df(spark, 
+    return local_df(spark,
         out, "lang string, n_tok bigint, excess double, weight double"
     )
 
@@ -9778,7 +9778,7 @@ def vocab_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
             best[j] = min(opts) if opts else None
         key = best[len(w)]
         out.append((w, f, key % 64, key // 64))
-    return local_df(spark, 
+    return local_df(spark,
         out, "word string, freq bigint, n_tokens bigint, min_cost bigint"
     )
 

@@ -213,6 +213,137 @@ class TestMulticlassHinge:
         assert res.accuracy > 0.9, res
 
 
+class TestResidentAllReduce:
+    """The one-job AllReduce hub (psvm_spark.ml.allreduce) under rank
+    failure, stray connections, failing jobs and empty input."""
+
+    @staticmethod
+    def _pairs(spark):
+        # rows (i, 1.0) for i < 40 over 2 partitions: column sums 780, 40
+        return spark.range(0, 40, numPartitions=2).select(
+            F.array(F.col("id").cast("double"), F.lit(1.0)).alias("x")
+        )
+
+    @staticmethod
+    def _scaled_sums():
+        # nested, so it is shipped by value: executors cannot import tests
+        def partial(blocks, x):
+            import numpy as _np
+
+            acc = _np.zeros(2)
+            for X in blocks:
+                acc += X.sum(axis=0) * x
+            return acc
+
+        return partial
+
+    def test_rank_failure_mid_solve_gives_identical_w(self, spark, sf_dir, tmp_path, monkeypatch):
+        """Rank 0 dies in round 3 of its first attempt: Spark relaunches
+        the barrier stage, the hub resends the current W, and the result
+        is bit-identical to an undisturbed solve."""
+        import os
+
+        from psvm_spark.ml import allreduce
+        from psvm_spark.ml.multiclass import train_multiclass_hinge
+
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("label").cast("long").alias("y"), "embedding"
+        ).repartition(3)
+        dim = len(e.select("embedding").first()[0])
+        W_ref = train_multiclass_hinge(e, "embedding", "y", 10, dim, n_iter=5)
+
+        marker = str(tmp_path / "rank0_failed")
+        real_run = allreduce.run
+
+        def flaky_run(df, load, partial, size, solve):
+            rounds = [0]
+
+            def flaky(blocks, x):
+                from pyspark import TaskContext
+
+                rounds[0] += 1
+                if rounds[0] == 3 and TaskContext.get().partitionId() == 0:
+                    if not os.path.exists(marker):
+                        open(marker, "w").close()
+                        raise RuntimeError("injected rank failure")
+                return partial(blocks, x)
+
+            return real_run(df, load, flaky, size, solve)
+
+        monkeypatch.setattr(allreduce, "run", flaky_run)
+        W = train_multiclass_hinge(e, "embedding", "y", 10, dim, n_iter=5)
+        assert os.path.exists(marker)
+        assert np.array_equal(W, W_ref)
+
+    def test_connection_without_token_never_counts(self, spark):
+        import socket
+        import struct
+
+        from psvm_spark.ml import allreduce
+
+        strays = []
+        # a wrong token with a well-formed hello claiming rank 0 with the
+        # newest task attempt id (it would displace the real rank 0), and
+        # a short garbage write; both arrive before the real ranks
+        fake_hello = b"\x00" * 32 + struct.pack("!iq", 0, 2**62)
+
+        def solve(hub):
+            for payload in (fake_hello, b"GET / HTTP/1.0\r\n"):
+                s = socket.create_connection(hub.address, timeout=10)
+                s.sendall(payload)
+                strays.append(s)
+            return hub(np.array([1.0, 2.0]))
+
+        got = allreduce.run(
+            self._pairs(spark), allreduce.vector_loader(), self._scaled_sums(), 2, solve
+        )
+        assert got.tolist() == [780.0, 80.0]
+        for s in strays:
+            assert s.recv(1) == b""  # the hub closed it
+            s.close()
+
+    @pytest.mark.parametrize("failing", ["rank", "driver"])
+    def test_failing_job_raises_promptly(self, spark, failing):
+        """A rank that always fails, or a driver step that fails before
+        round 1, raises its own error long before the 600 s idle bound."""
+        import time
+
+        from psvm_spark.ml import allreduce
+
+        def broken(blocks, x):
+            raise RuntimeError("rank cannot compute")
+
+        def solve(hub):
+            if failing == "driver":
+                raise RuntimeError("driver cannot step")
+            return hub(np.ones(2))
+
+        partial = broken if failing == "rank" else self._scaled_sums()
+        t = time.perf_counter()
+        with pytest.raises(Exception, match=f"{failing} cannot"):
+            allreduce.run(self._pairs(spark), allreduce.vector_loader(), partial, 2, solve)
+        assert time.perf_counter() - t < 120
+
+    def test_empty_input(self, spark, sf_dir):
+        """No rows (empty partitions, or none at all): W stays zero and
+        power iteration returns the start vector with eigenvalue 0."""
+        from psvm_spark.ml.failsafe import power_iteration
+        from psvm_spark.ml.multiclass import train_multiclass_hinge
+
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("label").cast("long").alias("y"), "embedding"
+        )
+        dim = len(e.select("embedding").first()[0])
+        no_partitions = spark.createDataFrame(spark.sparkContext.emptyRDD(), e.schema)
+        assert no_partitions.rdd.getNumPartitions() == 0
+        v0 = np.ones(dim) / np.sqrt(dim)
+        for empty in (e.filter(F.col("vec_id") < 0), no_partitions):
+            W = train_multiclass_hinge(empty, "embedding", "y", 10, dim, n_iter=3)
+            assert W.shape == (10, dim) and not W.any()
+            v, lam = power_iteration(empty, "embedding", dim, n_iter=3)
+            assert lam == 0.0 and np.array_equal(v, v0)
+
+
 class TestClassWeights:
     def test_positive_weight_shifts_predictions(self, spark, sf_dir):
         """The reference's -positive_weight/-negative_weight knob: an

@@ -229,3 +229,17 @@ class TestScratchDirCleanup:
         shutil.rmtree(d, ignore_errors=True)
         _SCRATCH_ROOTS.remove(d)
         assert not os.path.exists(d)
+
+
+class TestLocalDf:
+    def test_generator_rows_are_not_consumed_by_the_nan_scan(self, spark):
+        """A generator of rows gives the same DataFrame as a list (the
+        NaN pre-scan used to exhaust it, leaving an empty frame)."""
+        from psvm_spark.queries._util import local_df
+
+        rows = [(1, "a", 0.5), (2, None, float("nan")), (3, "c", None)]
+        for batch in (rows[::2], rows):  # Arrow path, then the NaN path
+            got = local_df(spark, (r for r in batch), "k int, s string, x double").collect()
+            want = local_df(spark, batch, "k int, s string, x double").collect()
+            assert len(got) == len(batch)
+            assert [repr(tuple(r)) for r in got] == [repr(tuple(r)) for r in want]  # NaN-safe
